@@ -53,10 +53,3 @@ def bq(name: str) -> str:
     dots)."""
     return "`" + name.replace("`", "``") + "`"
 
-
-def is_plain(name: str) -> bool:
-    """True when ``name`` is a plain identifier whose SQL-text reference
-    is exactly equivalent to ``F.col(name)`` (no dots — dotted names mean
-    nested access in both forms, but quoting rules differ; stay on the
-    Column path for anything unusual)."""
-    return name.isidentifier() and not name.startswith("__etielle_variant")

@@ -40,7 +40,7 @@ from .core import (
     resolve_path,
     strip_marker_fields,
 )
-from .colcache import bq, cexpr, is_plain
+from .colcache import bq, cexpr
 from .models import is_model_class, spark_schema_of, table_name_of
 from .policies import LastWriteWinsPolicy, MergePolicy
 from .telemetry import (
@@ -354,31 +354,18 @@ def _root_env(
     elif isinstance(root, DataFrame):
         # the order column is arrival metadata, not part of the document
         node_cols = [c for c in root.columns if c != order_col]
-        if node_cols and all(is_plain(c) for c in node_cols) and (
-            order_col is None or is_plain(order_col)
-        ):
-            # memoized SQL text: 2 cached expressions instead of
-            # ~(2 x n_cols + 6) py4j trips, re-used across micro-batch
-            # compiles of the same schema (round 11, guide §7.3)
-            ord_text = (
-                f"CAST({bq(order_col)} AS BIGINT) AS __roword"
-                if order_col
-                else "CAST(0 AS BIGINT) AS __roword"
-            )
-            df = root.select(
-                cexpr(
-                    "struct(" + ", ".join(bq(c) for c in node_cols) + ") AS __n0"
-                ),
-                cexpr(ord_text),
-            )
-        else:
-            row_ord = (
-                F.col(order_col).cast("long") if order_col else F.lit(0).cast("long")
-            )
-            df = root.select(
-                F.struct(*[F.col(c) for c in node_cols]).alias("__n0"),
-                row_ord.alias("__roword"),
-            )
+        # memoized SQL text: 2 cached expressions instead of
+        # ~(2 x n_cols + 6) py4j trips, re-used across micro-batch
+        # compiles of the same schema (round 11, guide §7.3)
+        ord_text = (
+            f"CAST({bq(order_col)} AS BIGINT) AS __roword"
+            if order_col
+            else "CAST(0 AS BIGINT) AS __roword"
+        )
+        df = root.select(
+            cexpr("struct(" + ", ".join(bq(c) for c in node_cols) + ") AS __n0"),
+            cexpr(ord_text),
+        )
         dtype = T.StructType([f for f in root.schema.fields if f.name != order_col])
         if cache is not None:
             cache[key] = (df, dtype)
@@ -946,9 +933,10 @@ class PipelineResult:
 
     def row_set(self, name: str, *cols: str) -> set[tuple]:
         df = self._tables_dict[name]
-        use = list(cols) if cols else df.columns
+        if cols:
+            df = df.select(*[bq(c) for c in cols])
         out = set()
-        for r in df.select(*use).collect():
+        for r in df.collect():
             out.add(tuple(_freeze(_plain_py(v)) for v in r))
         return out
 
@@ -1633,29 +1621,15 @@ def _null_empty_key_filter(df: DataFrame, keys: list[str]) -> DataFrame:
     Variant-typed keys (string/number-mixed fields) test emptiness on
     their JSON form — ``""`` is the empty STRING key; numeric 0 and
     ``"0"`` are valid keys."""
-    # SQL-text predicate when every key is a plain identifier: ONE py4j
-    # round trip instead of ~6 per key (the fluent compile is
-    # driver-latency-bound; round 11, guide §7.3)
-    if all(is_plain(k) for k in keys):
-        parts = []
-        for k in keys:
-            if isinstance(df.schema[k].dataType, T.VariantType):
-                parts.append(
-                    f"({bq(k)} IS NOT NULL AND to_json({bq(k)}) <> '\"\"')"
-                )
-            else:
-                parts.append(
-                    f"({bq(k)} IS NOT NULL AND CAST({bq(k)} AS STRING) <> '')"
-                )
-        return df.filter(" AND ".join(parts)) if parts else df
-    cond = F.lit(True)
+    # SQL-text predicate: ONE py4j round trip instead of ~6 per key (the
+    # fluent compile is driver-latency-bound; round 11, guide §7.3)
+    parts = []
     for k in keys:
-        c = F.col(k)
         if isinstance(df.schema[k].dataType, T.VariantType):
-            cond = cond & c.isNotNull() & (F.to_json(c) != F.lit('""'))
+            parts.append(f"({bq(k)} IS NOT NULL AND to_json({bq(k)}) <> '\"\"')")
         else:
-            cond = cond & c.isNotNull() & (c.cast("string") != F.lit(""))
-    return df.filter(cond)
+            parts.append(f"({bq(k)} IS NOT NULL AND CAST({bq(k)} AS STRING) <> '')")
+    return df.filter(" AND ".join(parts)) if parts else df
 
 
 # escape hatch for the single-emission merge fast path (tests flip it to
@@ -1831,7 +1805,7 @@ def _assemble_table(
         if skip_merge:
             parts.append(
                 df.select(
-                    *[n if is_plain(n) else F.col(n) for n in field_order],
+                    *[bq(n) for n in field_order],
                     _ORD,
                 )
             )
@@ -1868,10 +1842,7 @@ def _assemble_table(
             # of the same pipeline shape (per-micro-batch foreachBatch
             # compiles pay this every batch; round 11, guide §7.3)
             aggs.extend(
-                cexpr(f"max_by({bq(n)}, {ord_text}) AS {bq(n)}")
-                if is_plain(n)
-                else F.max_by(F.col(n), ord_col).alias(n)
-                for n in lww_fields
+                cexpr(f"max_by({bq(n)}, {ord_text}) AS {bq(n)}") for n in lww_fields
             )
         elif lww_fields:
             aggs.append(
@@ -1970,11 +1941,9 @@ def _assemble_table(
         cols = []
         for name in field_order:
             if name in supplied:
-                cols.append(name if is_plain(name) else F.col(name))
-            elif is_plain(name):
-                cols.append(cexpr(f"NULL AS {bq(name)}"))
+                cols.append(bq(name))
             else:
-                cols.append(F.lit(None).alias(name))
+                cols.append(cexpr(f"NULL AS {bq(name)}"))
         cols.append(_ORD)
         parts.append(df.select(*cols))
 
@@ -1991,24 +1960,16 @@ def _assemble_table(
     if join_on and len(join_on) == 1 and "id" not in [p for p, _ in public_pairs]:
         key0 = join_on[0]
         if "id" in temp_names:
-            inj = [
-                cexpr(f"{bq(key0)} AS __inj_id")
-                if is_plain(key0)
-                else F.col(key0).alias("__inj_id")
-            ]
+            inj = [cexpr(f"{bq(key0)} AS __inj_id")]
             public_pairs = [("id", "__inj_id")] + public_pairs
         else:
-            inj = [
-                cexpr(f"{bq(key0)} AS id")
-                if is_plain(key0)
-                else F.col(key0).alias("id")
-            ]
+            inj = [cexpr(f"{bq(key0)} AS id")]
             public_pairs = [("id", "id")] + public_pairs
 
     # id injection + the _ORD -> _SEQ rename in ONE select (py4j/analysis
     # latency; see the grouped-select fusion above)
     out = out.select(
-        *[c if is_plain(c) else F.col(c) for c in out.columns if c != _ORD],
+        *[bq(c) for c in out.columns if c != _ORD],
         *inj,
         cexpr(f"{bq(_ORD)} AS {bq(_SEQ)}"),
     )
@@ -2123,12 +2084,8 @@ def _assemble_table(
 
 
 def _select_public(internal_df: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
-    if all(is_plain(i) and is_plain(p) for p, i in pairs):
-        # memoized rename expressions: ~0 py4j trips on re-compiles
-        return internal_df.select(
-            *[cexpr(f"{bq(i)} AS {bq(p)}") for p, i in pairs]
-        )
-    return internal_df.select(*[F.col(i).alias(p) for p, i in pairs])
+    # memoized rename expressions: ~0 py4j trips on re-compiles
+    return internal_df.select(*[cexpr(f"{bq(i)} AS {bq(p)}") for p, i in pairs])
 
 
 _NUM_KINDS = ("BIGINT", "INT", "SMALLINT", "TINYINT", "DOUBLE", "FLOAT", "BOOLEAN")

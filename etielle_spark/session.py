@@ -60,8 +60,7 @@ def get_spark(app_name: str = "etielle_spark", *, cpus: int | None = None) -> Sp
     # generic env-driven conf passthrough: semicolon-separated k=v pairs,
     # e.g. SPARK_GRAFT_EXTRA_CONF="spark.io.compression.codec=zstd;..." —
     # the parameterization seam for cluster-scale knobs (shuffle codec,
-    # AQE advisory sizes) that a local bench cannot adjudicate, and for
-    # conf A/B experiments (tools/exp_conf_ab.py) without code edits
+    # AQE advisory sizes) that a local bench cannot adjudicate
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
     for pair in filter(None, (p.strip() for p in extra.split(";"))):
         k, sep, v = pair.partition("=")

@@ -640,3 +640,26 @@ def test_bloom_bitmap_size_guards(spark):
     keys = {r["k"] for r in kept}
     assert set(range(50)) <= keys  # no false negatives
     assert len(keys) < 500  # actually pruned
+
+
+def test_pmi_keyness_caches_registered_and_releasable(spark):
+    from etielle_spark.caches import release_operator_caches, tracked_cache_count
+    from etielle_spark.operators.text import keyness_g2, pmi_collocations
+
+    release_operator_caches()
+    docs = spark.createDataFrame(
+        [("new york is big", True), ("new york wins", True), ("old town", False)],
+        "text string, flag boolean",
+    )
+    before = tracked_cache_count()
+    pmi = pmi_collocations(docs, "text", min_count=1, top_n=5).collect()
+    key = keyness_g2(docs, "text", "flag", min_count=1, top_n=5).collect()
+    assert tracked_cache_count() >= before + 2
+    assert any(r["w1"] == "new" and r["w2"] == "york" for r in pmi)
+    assert len(key) > 0
+    released = release_operator_caches()
+    assert released >= 2
+    # results recompute identically from lineage after release
+    pmi2 = pmi_collocations(docs, "text", min_count=1, top_n=5).collect()
+    assert pmi2 == pmi
+    release_operator_caches()

@@ -368,3 +368,21 @@ def test_compile_emission_trailing_and_modes(spark):
         fields=[Field("k", get("k"))],
     )
     assert sorted(r["k"] for r in df.collect()) == [1, 2]
+
+
+def test_dataframe_root_with_dotted_column_names(spark):
+    # dots in a root column or output field name are literal characters,
+    # not nested access
+    src = spark.createDataFrame(
+        [("u1", "Alice"), ("u2", "Bob")], "`user.id` string, name string"
+    )
+    result = (
+        etl(src)
+        .map_to(
+            "users",
+            fields=[Field("x.y", get(["user.id"])), Field("name", get("name"))],
+        )
+        .run()
+    )
+    assert result["users"].columns == ["x.y", "name"]
+    assert rows(result, "users") == {("u1", "Alice"), ("u2", "Bob")}

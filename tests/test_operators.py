@@ -1750,3 +1750,65 @@ def test_canonicalize_clusters_null_and_string_ids(spark):
     assert out["b"]["keep"] and out["a"]["dup_of"] == "b" and out["c"]["dup_of"] == "b"
     assert out[None]["keep"] and out[None]["cluster_id"] is None
     assert out["d"]["keep"] and out["d"]["cluster_id"] == "d"
+
+
+def _exact_ks(xs_a, xs_b):
+    """Driver-side exact two-sample KS over tiny lists."""
+    import bisect
+
+    vals = sorted(set(xs_a) | set(xs_b))
+    sa, sb = sorted(xs_a), sorted(xs_b)
+
+    def cdf(sorted_xs, v):
+        return bisect.bisect_right(sorted_xs, v) / len(sorted_xs)
+
+    return max(abs(cdf(sa, v) - cdf(sb, v)) for v in vals)
+
+
+def test_ks_drift_all_distinct_values_graceful_and_exact(spark):
+    from etielle_spark.operators.profile import ks_drift
+
+    # every value distinct: the (group, value) counts frame is row-scale,
+    # the adversarial shape for the pinned intermediate
+    n = 400
+    rows = [("a", i * 1.0 + 0.25) for i in range(n)] + [
+        ("b", i * 1.37 + 0.5) for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, "g string, v double")
+    out = ks_drift(df, "v", "g").collect()
+    assert len(out) == 1
+    r = out[0]
+    assert (r["group_a"], r["group_b"], r["n_a"], r["n_b"]) == ("a", "b", n, n)
+    truth = _exact_ks(
+        [i * 1.0 + 0.25 for i in range(n)], [i * 1.37 + 0.5 for i in range(n)]
+    )
+    assert math.isclose(r["ks_stat"], round(truth, 6), abs_tol=1e-9)
+
+
+def test_ks_drift_quantize_equals_prerounded(spark):
+    from etielle_spark.operators.profile import ks_drift
+
+    rows = [("a", i / 977.0) for i in range(1500)] + [
+        ("b", (i * 1.11) / 977.0) for i in range(1500)
+    ]
+    df = spark.createDataFrame(rows, "g string, v double")
+    q = ks_drift(df, "v", "g", quantize=2)
+    pre = ks_drift(df.select("g", F.round("v", 2).alias("v")), "v", "g")
+    assert q.collect() == pre.collect()
+    # and the quantized domain is actually bounded
+    n_distinct = df.select(F.round("v", 2).alias("v")).distinct().count()
+    assert n_distinct < 350  # vs 2x1500 raw rows
+
+
+def test_cms_estimate_topk_reserved_columns_raise(spark):
+    from etielle_spark.operators.sketches import cms_cells, cms_estimate_topk
+
+    df = spark.createDataFrame([("x",), ("x",), ("y",)], "`__item` string")
+    sketch = cms_cells(df, [], depth=3, width=16)
+    bad = df.withColumn("cnt", F.lit(1))
+    with pytest.raises(ValueError, match="reserved"):
+        cms_estimate_topk(sketch, bad, [], depth=3, width=16, k=2)
+    # the clean candidate frame still works
+    good = cms_estimate_topk(sketch, df.distinct(), [], depth=3, width=16, k=2)
+    rows = {r["item"]: r["est_count"] for r in good.collect()}
+    assert rows["x"] >= 2 and rows["y"] >= 1

@@ -826,3 +826,16 @@ def test_incremental_hll_foreachbatch_stream(spark, tmp_path):
         for r in hll_distinct(docs, ["lang"], "text").collect()
     }
     assert got == want and want
+
+
+def test_derived_stream_partitions_clamps(spark):
+    from etielle_spark.streaming.windows import derived_stream_partitions
+
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert derived_stream_partitions(spark, 1) == min(cur, 4)
+    assert derived_stream_partitions(spark, 10_000_000) == cur
+    # ceil(125k / 50k) = 3 -> floor of 4 applies
+    assert derived_stream_partitions(spark, 125_000) == min(cur, 4)
+    assert derived_stream_partitions(spark, 250_000, rows_per_task=50_000) == min(
+        cur, 5
+    )
